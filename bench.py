@@ -90,7 +90,7 @@ def main() -> None:
         n_docs = raw_docs.count()  # warm the JVM + parquet footer outside timers
 
         # DEFAULT index layout: length-ordered docIDs (document reordering,
-        # corpus.length_ordered_documents).  BM25's length norm ties score
+        # corpus.reorder_documents).  BM25's length norm ties score
         # magnitude to doc_len, so ascending-length ids give every (term,
         # chunk/bucket) a monotone tf_norm range — block-max bounds become
         # discriminative and WAND/batch skipping can fire (the driver's
@@ -197,51 +197,55 @@ def main() -> None:
             ).count(),
         )
 
-        # pruning evidence: evaluator choice + chunks decoded vs total per
-        # query (constant per query; one representative row each).  Block-
-        # max skipping operates per doc-range bucket, so it needs bucket
-        # COUNT to act on: the main span-2048 index has 2-3 buckets on this
-        # tiny corpus (a production corpus has 10^5+ at the same span), so
-        # the skip studies run on a bucket-granular index over the same
-        # length-ordered postings — ~64 buckets, the geometry a real
-        # corpus's doc-range structure actually exposes to the evaluator.
+        # pruning evidence: the kernel's chunks decoded vs total per query,
+        # from wand_topk's per-call counters (one call per query, so a
+        # call's counts are that query's).  Block-max skipping operates per
+        # doc-range bucket, so it needs bucket COUNT to act on: the main
+        # span-2048 index has 2-3 buckets on this tiny corpus (a production
+        # corpus has 10^5+ at the same span), so the skip studies run on a
+        # bucket-granular index over the same length-ordered postings — ~64
+        # buckets, the geometry a real corpus's doc-range structure actually
+        # exposes to the kernel.
         gspan = max(64, n_docs // 64)
         gblocks = build_block_index(
             spark.read.parquet(f"{tmp}/postings"), st["avg_doc_len"], bucket_span=gspan
         ).cache()
         gblocks.count()
         pruning: dict = {"index": f"length_ordered postings, bucket_span={gspan}"}
-        stats_rows = wand_topk(
-            gblocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K, with_stats=True
-        ).collect()
-        for r in stats_rows:
-            q = str(r["query_id"])
-            if q not in pruning:
+        for q in BENCH_QUERIES:
+            stats_rows = wand_topk(
+                gblocks, lex, query_terms_df(spark, [q]), st["n_docs"], st["avg_doc_len"],
+                k=TOP_K, with_stats=True,
+            ).collect()
+            if stats_rows:
+                r = stats_rows[0]
                 tot, dec = int(r["chunks_total"]), int(r["chunks_decoded"])
-                pruning[q] = {
+                pruning[str(q[0])] = {
                     "evaluator": r["evaluator"],
                     "chunks_total": tot,
                     "chunks_decoded": dec,
                     "decode_ratio": round(dec / max(tot, 1), 4),
                 }
 
-        # chunk-level vs block-level score bounds: same cursor evaluator, one
-        # run with per-chunk max/min metadata, one with it stripped (block-
-        # level fallback) — the decoded-chunk delta is the measured win of
-        # the per-chunk metadata.  The driver testdata's vocabulary is all
+        # chunk-level vs block-level score bounds: the cursor reference
+        # (oracle.wand_cursor, the only chunk-granular skipper), one run
+        # with per-chunk max/min metadata, one with it stripped (block-level
+        # fallback) — the decoded-chunk delta is the measured win of the
+        # per-chunk metadata.  The driver testdata's vocabulary is all
         # hot negative-idf terms (WAND legitimately cannot prune there), so
         # this study runs on the package's synthetic code corpus, whose
         # mid-df positive-idf identifiers + rare uniq tokens are the regime
         # finer bounds actually help (rare term fills θ, hot chunks skip).
         def skip_study() -> dict:
+            from pyspark.sql import functions as F
+
             from sparksearch.corpus import documents_from_corpus, synthetic_corpus
+            from sparksearch.oracle.wand_cursor import cursor_topk
 
             sdocs = documents_from_corpus(synthetic_corpus(spark, 4000, seed=11)).cache()
             sposts = postings_from_documents(sdocs)
             sst = collection_stats(sdocs)
-            slex = lexicon(sposts).select("term", "df")
-            sblocks = build_block_index(sposts, sst["avg_doc_len"], bucket_span=1024).cache()
-            sblocks.count()
+            sblocks = build_block_index(sposts, sst["avg_doc_len"], bucket_span=1024)
             rq = [
                 (101, "uniq99tok buffer", DISJUNCTIVE),
                 (102, "uniq42tok data", DISJUNCTIVE),
@@ -249,20 +253,15 @@ def main() -> None:
                 (104, "uniq123tok size", DISJUNCTIVE),
                 (105, "uniq7tok count", DISJUNCTIVE),
             ]
-            qt_rare = query_terms_df(spark, rq)
+            rows = query_term_rows(rq)
+            bpdf = sblocks.filter(F.col("term").isin(sorted({r["term"] for r in rows}))).toPandas()
 
-            def _decoded(bdf):
-                rows = wand_topk(
-                    bdf, slex, qt_rare, sst["n_docs"], sst["avg_doc_len"],
-                    k=TOP_K, evaluator="cursor", with_stats=True,
-                ).collect()
-                agg: dict[int, tuple[int, int]] = {}
-                for r in rows:
-                    agg[r["query_id"]] = (int(r["chunks_total"]), int(r["chunks_decoded"]))
-                return agg
+            def _decoded(pdf):
+                res = cursor_topk(pdf, rows, sst["n_docs"], sst["avg_doc_len"], TOP_K)
+                return {q: (tot, dec) for q, (ranked, tot, dec) in res.items() if ranked}
 
-            chunk_meta = _decoded(sblocks)
-            block_meta = _decoded(sblocks.drop("chunk_max_norms", "chunk_min_norms"))
+            chunk_meta = _decoded(bpdf)
+            block_meta = _decoded(bpdf.drop(columns=["chunk_max_norms", "chunk_min_norms"]))
             out = {
                 str(q): {
                     "chunks_total": chunk_meta.get(q, (0, 0))[0],
@@ -272,7 +271,6 @@ def main() -> None:
                 for q in sorted(set(chunk_meta) | set(block_meta))
             }
             sdocs.unpersist()
-            sblocks.unpersist()
             return out
 
         rare_and_skipping = skip_study()

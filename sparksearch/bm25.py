@@ -9,8 +9,8 @@ hw3/DataLoader.cpp:302-314 (BM25_t_q):
 
 ONE floating-point association is pinned for the per-posting contribution of
 a weighted query term, across EVERY evaluator in the engine (exhaustive
-DataFrame scorer, cursor WAND, vectorized block-max, batch matrix path, pure-
-Python oracle, DuckDB oracle SQL):
+DataFrame scorer, the doc-sharded kernel's per-query and matrix paths, the
+cursor and pure-Python oracles, DuckDB oracle SQL):
 
     tf_norm = ((k1 + 1) * tf) / (K + tf)         # query-independent factor
     contribution = (weight * idf) * tf_norm

@@ -209,9 +209,9 @@ def documents_from_corpus(corpus: DataFrame, order_cols: list[str] | None = None
     parse-arrival order, SURVEY.md §1.1).  Alternative orderings are an
     index-layout knob: e.g. length-ordered ids (document reordering)
     concentrate BM25 score mass along the doc_id axis, which makes
-    per-bucket score bounds discriminative and lets the batch evaluator's
+    per-bucket score bounds discriminative and lets the kernel's
     bound-skipping fire (wand.py wand_topk_batch) — see
-    ``length_ordered_documents``.
+    :func:`reorder_documents`.
     """
     with_ids = assign_dense_ids(corpus, order_cols or ["repo", "path"])
     return with_ids.select(
@@ -226,30 +226,15 @@ def documents_from_corpus(corpus: DataFrame, order_cols: list[str] | None = None
     )
 
 
-def length_ordered_documents(corpus: DataFrame) -> DataFrame:
-    """Documents with docIDs assigned in ascending content-length order.
-
-    Document reordering: BM25's length norm makes short docs score high,
-    so length-ordered ids give every (term, bucket) a tight, monotone
-    tf_norm range — block-max bounds then separate buckets sharply and
-    WAND-style skipping (per-query and batch) prunes most of the index
-    for top-k queries.  Delta-gap compression also improves because
-    similar docs cluster.  (repo, path) tie-breaks keep the key unique.
-    """
-    keyed = corpus.withColumn(
-        "__len_key", F.lpad(F.length("content").cast("string"), 10, "0")
-    )
-    out = documents_from_corpus(keyed, ["__len_key", "repo", "path"])
-    return out.select(*[f.name for f in DOCUMENTS_SCHEMA.fields])
-
-
 def reorder_documents(documents: DataFrame) -> DataFrame:
     """Re-assign dense docIDs of an EXISTING canonical documents table in
-    ascending content-length order — the in-build form of document
-    reordering (folds the reorder into the index build instead of running
-    it as a separate derivation pass).  Identical id assignment to
-    :func:`length_ordered_documents` (lpad(doc_len) key, (repo, path)
-    tie-break), but reuses the already-computed ``doc_len`` /
+    ascending content-length order (lpad(doc_len) key, (repo, path)
+    tie-break) — document reordering, folded into the index build.
+
+    BM25's length norm makes short docs score high, so length-ordered ids
+    give every (term, bucket) a tight, monotone tf_norm range — block-max
+    bounds then separate buckets sharply and θ-skipping prunes most of the
+    index for top-k queries.  Reuses the already-computed ``doc_len`` /
     ``content_sha256`` / ``commit`` columns, so the only work is
     :func:`assign_dense_ids`' linear passes."""
     keyed = documents.drop("doc_id").withColumn(

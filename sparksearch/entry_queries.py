@@ -450,7 +450,7 @@ _register(
 
 
 # 9c. the same batch evaluation over a LENGTH-ORDERED docID layout
-# (document reordering — corpus.length_ordered_documents): docIDs are
+# (document reordering — corpus.reorder_documents): docIDs are
 # reassigned densely in ascending content-length order, which makes
 # per-bucket score bounds vary monotonically along the doc_id axis so the
 # batch evaluator's θ-skipping actually fires (the uniform driver layout
@@ -458,11 +458,11 @@ _register(
 # remap exactly: dense rank over (lpad(length,10,'0'), repo, path) —
 # the same (unique) ordering key assign_dense_ids sorts on.
 def _spark_topk_batch_lenordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .corpus import length_ordered_documents
+    from .corpus import documents_from_corpus, reorder_documents
     from .wand import wand_topk_batch
 
     corpus = _docs(spark, sf_dir).select("repo", "path", "commit", "lang", "content")
-    docs = length_ordered_documents(corpus)
+    docs = reorder_documents(documents_from_corpus(corpus))
     st = collection_stats(docs)
     postings = postings_from_documents(docs)
     lex = lexicon(postings).select("term", "df")
@@ -1124,7 +1124,7 @@ def _streaming_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(stage)
             )
             part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            dst = os.path.join(input_dir, f"batch_{b}.parquet")
+            dst = os.path.join(input_dir, f"batch_{b:04d}.parquet")
             os.replace(os.path.join(stage, part), dst)
             # strictly increasing, well-separated mtimes: the source drains
             # oldest-first, so batch order (hence doc-id offsets) is pinned

@@ -12,8 +12,8 @@ stream state), so each batch's buckets are strictly disjoint from — and
 sort after — all existing buckets.  The alignment matters: two batches
 sharing a (term, bucket) would both restart block_id at 0, and the query
 path's (bucket, block_id) ordering would interleave their doc ranges,
-breaking the monotone ``block_last`` sequence the WAND cursors binary-
-search over.  The cost is doc-id GAPS at batch boundaries (ids are unique
+breaking the monotone ``block_last`` sequence the cursor reference
+(oracle.wand_cursor) binary-searches over.  The cost is doc-id GAPS at batch boundaries (ids are unique
 and ascending but not dense across batches — documented deviation from
 the batch builder's dense ids; BM25 and the query path never require
 density).  Encoding a micro-batch therefore never rewrites existing

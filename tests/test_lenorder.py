@@ -1,6 +1,6 @@
 """Document reordering (length-ordered docIDs) and batch-evaluator cache.
 
-Length-ordered ids (corpus.length_ordered_documents) are the standard
+Length-ordered ids (corpus.reorder_documents) are the standard
 index-layout lever that makes per-bucket score bounds discriminative:
 BM25's length norm ties score magnitude to doc_len, so once docIDs ascend
 with length every (term, bucket) has a tight monotone tf_norm range and
@@ -14,11 +14,7 @@ import pytest
 
 from sparksearch.blocks import build_block_index
 from sparksearch.constants import CONJUNCTIVE, DISJUNCTIVE
-from sparksearch.corpus import (
-    documents_from_corpus,
-    length_ordered_documents,
-    synthetic_corpus,
-)
+from sparksearch.corpus import documents_from_corpus, reorder_documents, synthetic_corpus
 from sparksearch.query import query_term_rows, query_terms_df, topk
 from sparksearch.stats import collection_stats, lexicon
 from sparksearch.tokenize import postings_from_documents
@@ -36,7 +32,7 @@ QUERIES = [
 @pytest.fixture(scope="module")
 def lctx(spark):
     corpus = synthetic_corpus(spark, 600, seed=7)
-    docs = length_ordered_documents(corpus).cache()
+    docs = reorder_documents(documents_from_corpus(corpus)).cache()
     posts = postings_from_documents(docs).cache()
     st = collection_stats(docs)
     lex = lexicon(posts).cache()
@@ -110,18 +106,3 @@ def test_meta_cache_lru_bounded(spark):
     assert (terms[-1],) in _META_CACHE[blocks]
     docs.unpersist()
     blocks.unpersist()
-
-
-def test_reorder_documents_equals_length_ordered(spark):
-    """corpus.reorder_documents (the in-build fold — re-ids an existing
-    canonical table, reusing doc_len/sha256) must assign EXACTLY the ids
-    length_ordered_documents assigns when deriving from the raw corpus."""
-    from sparksearch.corpus import documents_from_corpus, reorder_documents
-
-    corpus = synthetic_corpus(spark, 300, seed=23)
-    via_derive = length_ordered_documents(corpus)
-    canonical = documents_from_corpus(corpus)  # (repo,path)-ordered ids
-    via_reorder = reorder_documents(canonical)
-    a = sorted(map(tuple, via_derive.collect()))
-    b = sorted(map(tuple, via_reorder.collect()))
-    assert a == b

@@ -16,8 +16,10 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sparksearch.blocks import build_block_index  # noqa: E402
+from sparksearch.constants import TOP_K  # noqa: E402
 from sparksearch.corpus import synthetic_corpus  # noqa: E402
-from sparksearch.query import query_terms_df  # noqa: E402
+from sparksearch.oracle.wand_cursor import cursor_topk  # noqa: E402
+from sparksearch.query import query_term_rows, query_terms_df  # noqa: E402
 from sparksearch.stats import lexicon  # noqa: E402
 from sparksearch.streaming import read_index, run_incremental_index  # noqa: E402
 from sparksearch.tokenize import postings_from_documents  # noqa: E402
@@ -72,9 +74,9 @@ def test_streamed_index_equals_batch(spark, tmp_path):
     for b in state["batches"]:
         assert b["offset"] % 64 == 0
 
-    # batch twin over the SAME doc-id assignment + pinned avgdl; all three
-    # evaluators must agree (the cursor path walks blocks ACROSS batch
-    # buckets — the next_geq regression the bucket alignment guarantees)
+    # batch twin over the SAME doc-id assignment + pinned avgdl; the kernel
+    # and the cursor reference must agree (the cursor walks blocks ACROSS
+    # batch buckets — the next_geq regression the bucket alignment guarantees)
     posts = postings_from_documents(docs)
     batch_blocks = build_block_index(posts, stats["avg_doc_len"], bucket_span=64)
     batch_lex = lexicon(posts).select("term", "df")
@@ -82,12 +84,18 @@ def test_streamed_index_equals_batch(spark, tmp_path):
     qt = query_terms_df(spark, QUERIES)
     key = lambda r: (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))  # noqa: E731
     want = wand_topk(batch_blocks, batch_lex, qt, stats["n_docs"], stats["avg_doc_len"]).collect()
-    for ev in ("auto", "cursor", "vectorized"):
-        got = wand_topk(
-            blocks, lex, qt, stats["n_docs"], stats["avg_doc_len"], evaluator=ev
-        ).collect()
-        assert sorted(map(key, got)) == sorted(map(key, want)), ev
-        assert len(got) > 0
+    got = wand_topk(blocks, lex, qt, stats["n_docs"], stats["avg_doc_len"]).collect()
+    assert sorted(map(key, got)) == sorted(map(key, want))
+    assert len(got) > 0
+    ref = cursor_topk(
+        blocks.toPandas(), query_term_rows(QUERIES), stats["n_docs"], stats["avg_doc_len"], TOP_K
+    )
+    ref_rows = [
+        {"query_id": q, "rank": rk, "doc_id": d, "score": sc}
+        for q, (ranked, _, _) in ref.items()
+        for rk, (d, sc) in enumerate(ranked, 1)
+    ]
+    assert sorted(map(key, ref_rows)) == sorted(map(key, want))
 
 
 def test_stream_resume_no_double_count(spark, tmp_path):
