@@ -277,11 +277,11 @@ def main() -> None:
 
         # document reordering A/B: the same corpus indexed with the driver's
         # uniform-random docIDs vs the LENGTH-ORDERED layout (the bench
-        # default above), same bucket_span, same query set, θ-skipping
-        # forced — per-bucket score bounds vary monotonically along the
-        # doc_id axis under length ordering, so the batch evaluator's
-        # bound-skipping fires (query_evals_skipped > 0) where the uniform
-        # layout gives every bucket the same bound and skips ~nothing.
+        # default above), same bucket_span, same query set — per-bucket
+        # score bounds vary monotonically along the doc_id axis under
+        # length ordering, so the batch evaluator's running-θ bucket skip
+        # fires (query_evals_skipped > 0) where the uniform layout gives
+        # every bucket the same bound and skips ~nothing.
         # Driver entry wand_batch_topk_lenordered hard-checks rank
         # identity vs DuckDB.
         def lenorder_study() -> dict:
@@ -301,11 +301,9 @@ def main() -> None:
                 t0 = time.perf_counter()
                 wand_topk_batch(
                     bdf, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K,
-                    prune=True, stats_out=so,
+                    stats_out=so,
                 ).count()
                 t = time.perf_counter() - t0
-                tot = so.get("query_evals_total")
-                sk = so.get("query_evals_skipped")
                 # compression accounting per layout (judge r4 item 3: the
                 # reorder lever's net value measured, not asserted): same
                 # postings, same span — payload delta is purely the doc-id
@@ -313,8 +311,8 @@ def main() -> None:
                 sz = index_size_stats(bdf)
                 out[label] = {
                     "t_sec": round(t, 4),
-                    "query_evals_total": int(tot.value) if tot is not None else None,
-                    "query_evals_skipped": int(sk.value) if sk is not None else None,
+                    "query_evals_total": int(so["query_evals_total"].value),
+                    "query_evals_skipped": int(so["query_evals_skipped"].value),
                     "payload_bytes": int(sz["payload_bytes"]),
                     "n_blocks": int(sz["n_blocks"]),
                 }

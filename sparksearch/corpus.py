@@ -233,10 +233,10 @@ def reorder_documents(documents: DataFrame) -> DataFrame:
 
     BM25's length norm makes short docs score high, so length-ordered ids
     give every (term, bucket) a tight, monotone tf_norm range — block-max
-    bounds then separate buckets sharply and θ-skipping prunes most of the
-    index for top-k queries.  Reuses the already-computed ``doc_len`` /
-    ``content_sha256`` / ``commit`` columns, so the only work is
-    :func:`assign_dense_ids`' linear passes."""
+    bounds then separate buckets sharply, so once a shard of the batch
+    kernel holds k results its running θ skips later buckets.  Reuses the
+    already-computed ``doc_len`` / ``content_sha256`` / ``commit`` columns,
+    so the only work is :func:`assign_dense_ids`' linear passes."""
     keyed = documents.drop("doc_id").withColumn(
         "__len_key", F.lpad(F.col("doc_len").cast("string"), 10, "0")
     )

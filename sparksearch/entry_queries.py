@@ -406,7 +406,7 @@ _register(
 #        decode-once-score-many per bucket, per-bucket top-k merge) — must
 #        equal the same exhaustive SQL oracle rank-identically
 def _spark_topk_batch(
-    spark: SparkSession, sf_dir: str, mode: str, prune: bool | str = "auto"
+    spark: SparkSession, sf_dir: str, mode: str, n_shards: int | None = None
 ) -> DataFrame:
     from .wand import wand_topk_batch
 
@@ -422,7 +422,7 @@ def _spark_topk_batch(
     # contract is matched structurally
     raw = wand_topk_batch(
         blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K,
-        prune=prune, micro_rank=True,
+        micro_rank=True, n_shards=n_shards,
     )
     return raw.select(
         "query_id", "rank", "doc_id", micro(F.col("score")).alias("score_micro")
@@ -439,12 +439,13 @@ _register(
     lambda spark, sf_dir: _spark_topk_batch(spark, sf_dir, CONJUNCTIVE),
     _topk_sql(CONJUNCTIVE),
 )
-# same oracle with θ-skipping FORCED on (the adaptive gate declines on the
-# uniform driver testdata): hard-green proof that bound pruning never
-# changes results, checked by the driver itself
+# same oracle with ONE shard: a single task walks every bucket in doc
+# order, so the running θ holds k results earliest and skips the most —
+# hard-green proof that bound skipping never changes results, checked by
+# the driver itself
 _register(
     "wand_batch_topk_pruned",
-    lambda spark, sf_dir: _spark_topk_batch(spark, sf_dir, DISJUNCTIVE, prune=True),
+    lambda spark, sf_dir: _spark_topk_batch(spark, sf_dir, DISJUNCTIVE, n_shards=1),
     _topk_sql(DISJUNCTIVE),
 )
 
@@ -470,7 +471,7 @@ def _spark_topk_batch_lenordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     qt = query_terms_df(spark, [q for q in QUERY_SET if q[2] == DISJUNCTIVE])
     raw = wand_topk_batch(
         blocks, lex, qt, st["n_docs"], st["avg_doc_len"], k=TOP_K,
-        prune=True, micro_rank=True,
+        micro_rank=True,
     )
     return raw.select(
         "query_id", "rank", "doc_id", micro(F.col("score")).alias("score_micro")

@@ -9,7 +9,10 @@ kernel, :func:`_batch_walk_shard`: the vocabulary-pruned index is shuffled
 once into doc-range shards, each shard walks its buckets in ascending doc
 order, decodes every matched term once, scores ALL queries against the
 decoded arrays range-at-a-time, and keeps a per-query running top-k whose
-k-th score is a θ that bound-skips later buckets.  A final window merges
+k-th score is a θ.  That running θ is the ONE skip rule: a later bucket
+whose per-(bucket, term) score bound falls below a query's θ skips that
+query's dense evaluation (the reference's heap-threshold tightening,
+hw3/DataLoader.cpp:636-671, at bucket granularity).  A final window merges
 the shards' k rows per query.  The posting-at-a-time cursor WAND is kept
 only as a test reference (``sparksearch.oracle.wand_cursor``).
 
@@ -43,18 +46,21 @@ under-estimates and can skip a winning pos-only doc — see
 Conjunctive evaluation forces every term present, so there the plain sum
 is sound (and tighter).
 
-Rank identity under skipping: θ is always an ACHIEVED k-th score, and a
-bucket is skipped only when its bound sits strictly below θ (minus a
-float-safety margin), so a skipped doc could not even tie the final k-th.
+Rank identity under skipping: θ is always an ACHIEVED k-th score within
+the shard (a lower bound on the final k-th), and a bucket is skipped only
+when its bound sits strictly below θ (minus a float-safety margin, one
+micro quantum more under micro ranking), so a skipped doc could not even
+tie the final k-th.
 """
 
 from __future__ import annotations
 
-import warnings
+import threading
+import weakref
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -62,22 +68,10 @@ from .bm25 import bm25_idf_py
 from .codec import decode_block, tf_norm
 from .constants import CONJUNCTIVE, TOP_K
 
-# {blocks DataFrame -> LRU{vocab tuple -> collected (bucket, term, mx, mn)
-# rows}} for wand_topk_batch's θ-gate metadata pass (see its prune block);
-# the inner map is bounded so diverse query batches against one index
-# cannot grow driver memory without limit
-import threading
-import weakref
-from collections import OrderedDict
-
-_META_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_META_CACHE_PER_DF = 8
-
-# guards mutation of _META_CACHE / _LEX_CACHE: a long-running batch service
-# may drive wand_topk_batch from several driver threads, and an unguarded
-# OrderedDict move_to_end/popitem race corrupts the LRU (ADVICE r4).  Spark
-# collects happen OUTSIDE the lock — a lost race costs one redundant
-# metadata job, never a wrong answer.
+# guards mutation of _LEX_CACHE: a long-running batch service may drive
+# wand_topk_batch from several driver threads (ADVICE r4).  Spark collects
+# happen OUTSIDE the lock — a lost race costs one redundant lexicon job,
+# never a wrong answer.
 _CACHE_LOCK = threading.Lock()
 
 # {lexicon DataFrame -> {term -> df}} incremental cache for the driver-side
@@ -89,9 +83,6 @@ _CACHE_LOCK = threading.Lock()
 _LEX_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _LEX_CACHE_MAX_TERMS = 1 << 16
 
-# _prune_gate temp-memory budget: elements per (query-block x buckets) array
-_GATE_TARGET_ELEMS = 16 << 20
-
 
 def _lexicon_dfs(lexicon: DataFrame, vocab: list[str]) -> dict[str, int]:
     """df counts for ``vocab`` from the lexicon, incrementally cached per
@@ -99,8 +90,7 @@ def _lexicon_dfs(lexicon: DataFrame, vocab: list[str]) -> dict[str, int]:
     DataFrame, so a rebuilt lexicon (a new object) can never serve stale
     counts.  The per-DataFrame dict is cleared if it would outgrow
     ``_LEX_CACHE_MAX_TERMS`` (query vocabularies are tiny; the bound only
-    guards a pathological unbounded-vocabulary service, mirroring the
-    _META_CACHE LRU bound)."""
+    guards a pathological unbounded-vocabulary service)."""
     with _CACHE_LOCK:
         cache = _LEX_CACHE.setdefault(lexicon, {})
         out = {t: cache[t] for t in vocab if t in cache}
@@ -159,110 +149,6 @@ def _disjunctive_bound(acc_pos: float, best_single: float) -> float:
     return acc_pos if acc_pos > 0.0 else best_single
 
 
-def _prune_gate(
-    queries: dict[int, dict],
-    idf_by_term: dict[str, float],
-    term_arrays: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]],
-    buckets_sorted: list[int],
-    n_b: int,
-) -> tuple[dict[int, int], int, int]:
-    """Seed-bucket selection + skip-potential estimate for the batch θ-skip
-    (see :func:`wand_topk_batch`'s prune block): per query, the bound over
-    every bucket from per-(bucket, term) tf_norm extremes; the seed is the
-    bucket with the highest bound; a (query, bucket) pair counts as skip
-    POTENTIAL when its bound sits clearly below the query's MEDIAN bound
-    (not the best — a single rare-term bucket would make every other bucket
-    look skippable when the real θ is far lower).  Uniform corpora cluster
-    within ~5% of the median -> zero potential -> the auto gate declines.
-
-    Vectorized over QUERY BLOCKS: per-query numpy calls over a (n_buckets,)
-    axis cost ~0.3 s driver-SERIAL at 3k queries x 150 buckets — a fixed
-    per-call cost that capped measured short-phase 4x-core scaling.  idf is
-    a per-TERM global (one definition, bm25_idf_py), so the mx-vs-mn base
-    selection hoists out of the query loop; each term slot of a block is
-    then one (B, n_buckets) masked accumulation, identical arithmetic to
-    the per-query formulation (tests/test_wand.py pins the equivalence
-    against a straight scalar port).
-
-    Returns (seed_of {qid: seed bucket}, valid_pairs, potential_pairs).
-    """
-    seed_of: dict[int, int] = {}
-    potential_pairs = 0
-    valid_pairs = 0
-    qitems_all = list(queries.items())
-    if not term_arrays or not qitems_all:
-        return seed_of, valid_pairs, potential_pairs
-    terms_list = list(term_arrays)
-    tpos = {t: i for i, t in enumerate(terms_list)}
-    mx_a = np.stack([term_arrays[t][0] for t in terms_list])
-    mn_a = np.stack([term_arrays[t][1] for t in terms_list])
-    pres_a = np.stack([term_arrays[t][2] for t in terms_list])
-    base_is_mx = np.array([idf_by_term.get(t, 0.0) >= 0 for t in terms_list])
-    base_a = np.where(base_is_mx[:, None], mx_a, mn_a)
-    max_s = max(len(q["terms"]) for _, q in qitems_all)
-    # ADAPTIVE query-block size: ~6 live (B, n_buckets) float64 temporaries
-    # exist per block, so bound B*n_buckets ELEMENTS (not B alone) — a fixed
-    # B=1024 at a production 10^5-bucket geometry is ~0.8 GB per array on
-    # the driver (ADVICE r4); 16M elements keeps the live set under ~1 GB
-    # total regardless of bucket count, and B=1024 remains the cap so small
-    # indexes keep the measured blocking.
-    qblk = max(1, min(1024, _GATE_TARGET_ELEMS // max(n_b, 1)))
-    for blk in range(0, len(qitems_all), qblk):
-        part = qitems_all[blk : blk + qblk]
-        nq = len(part)
-        tidx = np.zeros((nq, max_s), np.int64)
-        slot_ok = np.zeros((nq, max_s), bool)
-        wi = np.zeros((nq, max_s))
-        missing_q = np.zeros(nq, bool)
-        conj = np.zeros(nq, bool)
-        for r, (qid, q) in enumerate(part):
-            conj[r] = q["mode"] == CONJUNCTIVE
-            for s, (t, (w, idf)) in enumerate(q["terms"].items()):
-                ti = tpos.get(t)
-                if ti is None:
-                    missing_q[r] = True
-                    continue
-                tidx[r, s] = ti
-                slot_ok[r, s] = True
-                wi[r, s] = w * idf
-        acc_sum = np.zeros((nq, n_b))
-        acc_pos = np.zeros((nq, n_b))
-        best_term = np.full((nq, n_b), -np.inf)
-        all_present = np.ones((nq, n_b), bool)
-        any_present = np.zeros((nq, n_b), bool)
-        for s in range(max_s):
-            ok = slot_ok[:, s]
-            if not ok.any():
-                continue
-            pres = pres_a[tidx[:, s]]
-            bd = wi[:, s : s + 1] * base_a[tidx[:, s]]
-            m = ok[:, None] & pres
-            acc_sum += np.where(m, bd, 0.0)
-            acc_pos += np.where(m & (bd > 0), bd, 0.0)
-            best_term = np.where(m, np.maximum(best_term, bd), best_term)
-            # pad / missing-term slots do not constrain presence
-            all_present &= ~ok[:, None] | pres
-            any_present |= m
-        valid = np.where(conj[:, None], all_present & ~missing_q[:, None], any_present)
-        bound = np.where(conj[:, None], acc_sum, np.where(acc_pos > 0, acc_pos, best_term))
-        has_valid = valid.any(axis=1)
-        bm = np.where(valid, bound, np.nan)
-        # all-NaN rows (no valid bucket) are filtered by has_valid below;
-        # nanmedian reports them via warnings, not the FP err state
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore", RuntimeWarning)
-            ref = np.nanmedian(bm, axis=1)
-        margin = 0.05 * np.maximum(1.0, np.abs(ref))
-        below = valid & (bound < (ref - margin)[:, None])
-        valid_pairs += int(valid[has_valid].sum())
-        potential_pairs += int(below[has_valid].sum())
-        best_i = np.argmax(np.where(valid, bound, -np.inf), axis=1)
-        for r, (qid, _q) in enumerate(part):
-            if has_valid[r]:
-                seed_of[qid] = buckets_sorted[int(best_i[r])]
-    return seed_of, valid_pairs, potential_pairs
-
-
 # shared by wand_topk_batch (broadcast query ingest) and
 # wand_topk_batch_distributed (DataFrame query ingest): BOTH paths run the
 # exact same per-shard kernel below, so their scores are bit-identical by
@@ -275,6 +161,23 @@ _BATCH_CAND_SCHEMA = T.StructType(
     ]
 )
 _BATCH_EMPTY = {"query_id": np.int32, "doc_id": np.int64, "score": np.float64}
+# stats_out keys, in _batch_walk_shard's ``accs`` order
+_STATS_KEYS = ("chunks_total", "chunks_decoded", "query_evals_total", "query_evals_skipped")
+
+
+def _merge_shards(cands: DataFrame, k: int, micro_rank: bool) -> DataFrame:
+    """Final merge window over the shards' ≤k candidate rows per query:
+    (query_id, rank, doc_id, score), ranked (score desc, doc_id asc) on
+    the micro-rounded key under ``micro_rank``."""
+    rank_col = (
+        F.round(F.col("score") * 1e6, 0).cast("long") if micro_rank else F.col("score")
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc(rank_col), F.asc("doc_id"))
+    return (
+        cands.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "doc_id", "score")
+    )
 
 
 def _query_bound(q: dict, term_stats: dict) -> float | None:
@@ -311,18 +214,16 @@ def _batch_score_bucket(
     qitems,
     run_theta: dict,
     collect,
-    thetas: dict | None,
-    acc_total,
-    acc_skipped,
     avg_doc_len: float,
     k: int,
     micro_rank: bool,
-) -> None:
+) -> tuple[int, int]:
     """Score every query of ``qitems`` against ONE bucket's blocks (see
     wand_topk_batch's docstring for the architecture).  Decodes each term
-    once, builds dense per-term accumulators, θ-skips (cross-task seed θ in
-    ``thetas`` + in-shard running θ in ``run_theta``), then either the BLAS
-    matrix path (≥32 survivors) or per-query dense vector adds."""
+    once, builds dense per-term accumulators, θ-skips against the shard's
+    running θ in ``run_theta``, then either the BLAS matrix path (≥32
+    survivors) or per-query dense vector adds.  Returns (evals, skipped):
+    the queries that could match this bucket, and those θ-skipped."""
     # decode each term once for this bucket; track per-term max/min tf_norm
     # over its blocks for the bound check.  Terms go in sorted order so the
     # matrix path's term axis does not depend on shuffle row order.
@@ -355,7 +256,7 @@ def _batch_score_bucket(
         lo = int(docs.min()) if lo is None else min(lo, int(docs.min()))
         hi = int(docs.max()) if hi is None else max(hi, int(docs.max()))
     if not decoded:
-        return
+        return 0, 0
 
     # dense per-bucket accumulators (the reference's TAAT dense score array,
     # hw3/DataLoader.cpp:376-392, applied per doc range): one bincount per
@@ -388,21 +289,17 @@ def _batch_score_bucket(
         term_dense[term] = (dn, mask)
 
     survivors: list[tuple[int, dict, list[str]]] = []
+    n_evals = n_skipped = 0
     for qid, q in qitems:
         present = [t for t in q["terms"] if t in term_dense]
         if not present:
             continue
         if q["mode"] == CONJUNCTIVE and len(present) < q["n_terms"]:
             continue
-        if thetas is not None and acc_total is not None:
-            acc_total.add(1)
-        # effective θ = max(cross-task seed θ, in-shard running k-th best)
-        # — both are achieved scores, so both are sound lower bounds on the
-        # final k-th
-        tq = thetas.get(qid) if thetas is not None else None
-        rt = run_theta.get(qid)
-        if rt is not None and (tq is None or rt > tq):
-            tq = rt
+        n_evals += 1
+        # θ = the shard's running k-th best ACHIEVED score, a sound lower
+        # bound on the final k-th
+        tq = run_theta.get(qid)
         if tq is not None:
             bound = _query_bound(q, term_stats)
             # strict less-than with a float-safety margin (one micro quantum
@@ -410,8 +307,7 @@ def _batch_score_bucket(
             # work, never results
             margin = 1e-9 * max(1.0, abs(tq)) + (1e-6 if micro_rank else 0.0)
             if bound is not None and bound < tq - margin:
-                if acc_skipped is not None and thetas is not None:
-                    acc_skipped.add(1)
+                n_skipped += 1
                 continue
         survivors.append((qid, q, present))
 
@@ -517,25 +413,23 @@ def _batch_score_bucket(
             docs_sel = np.flatnonzero(keep)
             if len(docs_sel):
                 emit(qid, docs_sel, score[docs_sel])
+    return n_evals, n_skipped
 
 
 def _batch_walk_shard(
     pdf: pd.DataFrame,
     qs: dict,
-    restrict: dict | None,
-    thetas: dict | None,
-    acc_total,
-    acc_skipped,
     avg_doc_len: float,
     k: int,
     micro_rank: bool,
-    acc_chunks: tuple | None = None,
+    accs: tuple | None = None,
 ) -> pd.DataFrame:
     """Walk ONE shard's buckets in ascending doc order keeping a per-query
     RUNNING top-k (see wand_topk_batch's n_shards paragraph); emits ≤k rows
-    per query for the final merge window.  ``acc_chunks`` = (received,
-    decoded) accumulators for the shard's ``n_chunks``."""
-    all_items = None if restrict is not None else list(qs.items())
+    per query for the final merge window.  ``accs`` = (chunks received,
+    chunks decoded, query evals, query evals θ-skipped) accumulators, each
+    added to once per shard."""
+    qitems = list(qs.items())
     # per-query running top-k across this shard's buckets (merged ≤2k
     # bounded cut per bucket) + running θ once k results exist
     cand: dict[int, tuple[np.ndarray, np.ndarray]] = {}
@@ -554,23 +448,18 @@ def _batch_walk_shard(
         if len(docs_sel) >= k:
             run_theta[qid] = float(scores_sel.min())
 
-    n_decoded = 0
-    for bucket_id, bpdf in pdf.groupby("bucket", sort=True):
-        if restrict is not None:
-            qitems = [(qid, qs[qid]) for qid in restrict.get(int(bucket_id), ())]
-            if not qitems:
-                continue
-        else:
-            qitems = all_items
-        # _batch_score_bucket decodes every block it is given
-        n_decoded += int(bpdf["n_chunks"].sum())
-        _batch_score_bucket(
-            bpdf, qitems, run_theta, collect, thetas, acc_total, acc_skipped,
-            avg_doc_len, k, micro_rank,
+    n_evals = n_skipped = 0
+    for _bucket, bpdf in pdf.groupby("bucket", sort=True):
+        e, sk = _batch_score_bucket(
+            bpdf, qitems, run_theta, collect, avg_doc_len, k, micro_rank
         )
-    if acc_chunks is not None:
-        acc_chunks[0].add(int(pdf["n_chunks"].sum()))
-        acc_chunks[1].add(n_decoded)
+        n_evals += e
+        n_skipped += sk
+    if accs is not None:
+        # _batch_score_bucket decodes every block it is given
+        n_chunks = int(pdf["n_chunks"].sum())
+        for acc, v in zip(accs, (n_chunks, n_chunks, n_evals, n_skipped)):
+            acc.add(v)
     if not cand:
         return pd.DataFrame({c: [] for c in _BATCH_EMPTY}).astype(_BATCH_EMPTY)
     out_q, out_d, out_s = [], [], []
@@ -594,7 +483,6 @@ def wand_topk_batch(
     n_docs: int,
     avg_doc_len: float,
     k: int = TOP_K,
-    prune: bool | str = "auto",
     stats_out: dict | None = None,
     micro_rank: bool = False,
     n_shards: int | None = None,
@@ -620,44 +508,11 @@ def wand_topk_batch(
     Rank-identical to the exhaustive scorer (query.topk) and the cursor
     reference (oracle.wand_cursor.cursor_topk), cross-tested.
 
-    ``prune=True`` adds per-(query, bucket) score-bound skipping — the
-    batch-mode analog of the reference's chunk skipping
-    (hw3/DataLoader.cpp:793-806).  Two cheap preliminary jobs derive a θ
-    lower bound per query:
-
-    1. a metadata-only aggregate (no payload bytes) of per-(bucket, term)
-       max/min tf_norm gives each query a score bound per bucket; the
-       bucket with the highest bound is the query's *seed* bucket;
-    2. seed buckets are scored exactly (each query only in its own seed);
-       the k-th best seed score is a sound lower bound θ_q on the final
-       global k-th score.
-
-    The main pass broadcasts {query: θ_q} and each bucket skips the dense
-    evaluation of any query whose bucket bound falls below θ_q (with a
-    1e-9-relative float-safety margin — skipped work, never skipped
-    correctness).  The seed bucket itself always survives its own bound
-    (θ_q is achieved inside it), so the main pass is self-contained.
-
-    ``prune="auto"`` (default) gates the θ-derivation job on a skip-
-    potential estimate from the metadata pass alone: bound-skipping can
-    only fire where per-bucket score bounds VARY across buckets (doc-
-    ordered heterogeneity — repo-sorted or time-ordered corpora), and on a
-    uniform corpus every bucket's bound beats θ, so the extra job would be
-    pure overhead.  If fewer than 5% of (query, bucket) pairs have a bound
-    meaningfully below the query's best bucket bound, pruning is skipped.
-    ``prune=True`` forces it; ``prune=False`` disables (single-job path).
-    ``stats_out`` (optional dict) receives accumulators
-    ``query_evals_total`` / ``query_evals_skipped`` (None when the gate
-    declined) and, always, ``chunks_total`` / ``chunks_decoded`` (the
-    ``n_chunks`` of every block the kernel received / decoded, over all of
-    the call's passes); read ``.value`` after an action (task retries can
-    make them approximate, evidence only).
-
     ``micro_rank=True`` truncates each shard's local top-k on the
     micro-rounded key (round(score*1e6) half-away, desc, doc_id asc) —
     a TOTAL order, so exactly k rows per shard suffice for any consumer
     that re-ranks on the micro score (the driver entries) with no tie
-    slack; the θ-skip margin widens to one micro quantum so pruning can
+    slack; the θ-skip margin widens to one micro quantum so skipping can
     never drop a doc that ties at micro resolution.  Emitted scores stay
     exact doubles either way.
 
@@ -669,16 +524,25 @@ def wand_topk_batch(
       per (query, bucket) — merge-shuffle volume is O(Q·k·shards), constant
       in corpus size (at 10^4+ buckets the per-bucket emit was the
       dominant shuffle);
-    * each query's running k-th-best score is a sound in-task θ: later
-      buckets in the shard whose metadata bound falls below it skip their
-      dense evaluation with NO extra Spark jobs (the distributed analog of
-      the reference's single-threaded heap threshold tightening as it
-      streams doc ranges, hw3/DataLoader.cpp:636-671) — this composes with
-      the cross-task seed-θ pass (``prune``), which remains the only way a
-      bucket can be skipped before its shard has accumulated k results.
-      Sound for the same reason as seed θ: the running θ is the k-th best
-      ACHIEVED score, visit order only affects how fast it tightens, and
-      the float/micro margins below make ties unskippable.
+    * each query's running k-th-best score is the ONE skip rule: a later
+      bucket in the shard whose metadata score bound (per-(bucket, term)
+      max/min tf_norm, :func:`_query_bound`) falls below it skips that
+      query's dense evaluation, with NO extra Spark jobs — the distributed
+      form of the reference's heap threshold tightening as it streams doc
+      ranges (hw3/DataLoader.cpp:636-671), i.e. the block-max top-k skip
+      of Ding & Suel (SIGIR'11) at bucket granularity.  It is sound
+      because θ is an ACHIEVED k-th score; visit order only affects how
+      fast it tightens, and the float/micro margins make ties unskippable.
+      A shard skips a bucket only after it holds k results, so fewer
+      shards skip more.
+
+    ``stats_out`` (optional dict) receives four accumulators:
+    ``chunks_total`` / ``chunks_decoded`` (the ``n_chunks`` of every block
+    the kernel received / decoded) and ``query_evals_total`` /
+    ``query_evals_skipped`` (the (query, bucket) pairs that could match,
+    and those the running θ skipped).  Read ``.value`` after an action;
+    the counts are per call, and task retries can make them approximate
+    (evidence only).
 
     ``qterms`` may be the usual DataFrame or a plain driver-side list of
     dicts/Rows with the same fields — query batches originate driver-side,
@@ -725,149 +589,18 @@ def wand_topk_batch(
         "shard", F.pmod(F.col("bucket"), F.lit(int(n_shards)))
     )
 
-    acc_chunks = (sc.accumulator(0), sc.accumulator(0)) if stats_out is not None else None
-
-    def make_scorer(restrict_bc, theta_bc, acc_total, acc_skipped):
-        """Per-SHARD scorer over the broadcast query set (see the n_shards
-        paragraph of the docstring; the kernel itself is the module-level
-        _batch_walk_shard, shared bit-for-bit with the distributed-ingest
-        variant).  restrict_bc: {bucket: [qid]} to score only each query's
-        seed bucket (θ-derivation pass); theta_bc: {qid: θ} to bound-skip
-        queries (cross-task pruned pass)."""
-
-        def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _batch_walk_shard(
-                pdf,
-                bq.value,
-                restrict_bc.value if restrict_bc is not None else None,
-                theta_bc.value if theta_bc is not None else None,
-                acc_total,
-                acc_skipped,
-                avg_doc_len,
-                k,
-                micro_rank,
-                acc_chunks,
-            )
-
-        return per_shard
-
-    theta_bc = None
-    acc_total = acc_skipped = None
-    if prune:
-        # pass 1 (metadata only, payload column pruned away): per-(bucket,
-        # term) norm extremes -> per-query bound over every bucket, seed
-        # bucket (highest bound), and the skip-potential gate.  All numpy
-        # over a (n_buckets,) axis per query term — no Python loop over
-        # buckets, so 10^4 buckets x 10^3 queries stays driver-cheap.
-        # The collected rows are memoized per (blocks DataFrame, vocab):
-        # a batch service evaluates many batches against one index
-        # snapshot, and the extremes depend only on the index — without
-        # the cache every call pays a metadata job whose only purpose on
-        # a uniform corpus is to let the gate decline.  WeakKeyDictionary:
-        # entries die with the DataFrame object, so a rebuilt index (a
-        # new DataFrame) can never hit a stale entry.  The per-DataFrame
-        # map is a small LRU (_META_CACHE_PER_DF entries, move-to-end on
-        # hit): a long-running service with diverse query vocabularies
-        # must not grow O(buckets x terms) rows per distinct vocab without
-        # bound (ADVICE r3).
-        meta_key = tuple(vocab)
-        with _CACHE_LOCK:
-            per_df = _META_CACHE.setdefault(blocks, OrderedDict())
-            meta = per_df.get(meta_key)
-            if meta is not None:
-                per_df.move_to_end(meta_key)
-        if meta is None:
-            meta = (
-                sel.groupBy("bucket", "term")
-                .agg(F.max("max_tf_norm").alias("mx"), F.min("min_tf_norm").alias("mn"))
-                .collect()
-            )
-            with _CACHE_LOCK:
-                per_df[meta_key] = meta
-                while len(per_df) > _META_CACHE_PER_DF:
-                    per_df.popitem(last=False)
-        buckets_sorted = sorted({int(r["bucket"]) for r in meta})
-        bk_pos = {bk: i for i, bk in enumerate(buckets_sorted)}
-        n_b = len(buckets_sorted)
-        term_arrays: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for r in meta:
-            t = r["term"]
-            if t not in term_arrays:
-                term_arrays[t] = (
-                    np.zeros(n_b),
-                    np.zeros(n_b),
-                    np.zeros(n_b, bool),
-                )
-            mx, mn, pres = term_arrays[t]
-            i = bk_pos[int(r["bucket"])]
-            mx[i], mn[i], pres[i] = float(r["mx"]), float(r["mn"]), True
-        seed_of, valid_pairs, potential_pairs = _prune_gate(
-            queries, idf_by_term, term_arrays, buckets_sorted, n_b
-        )
-        # the gate must weigh potential against the θ-derivation COST, not
-        # just detect heterogeneity.  Economics: a skipped (query, bucket)
-        # saves only that query's dense accumulation — the bucket still
-        # decodes every term once for the surviving queries — while the θ
-        # pass costs a full extra evaluation per query (its seed bucket),
-        # the seed buckets' decode, and two extra Spark jobs.  So pruning
-        # pays only when a LARGE fraction of per-query work is skippable:
-        # ≥25% of valid pairs AND ≥4 evaluations saved per evaluation the
-        # seed pass spends.  Near-uniform corpora sit at 5-15% (bound
-        # noise around the median margin) and decline; genuinely skewed
-        # corpora (time-ordered, per-repo term locality) clear 25% easily
-        # because rare terms are absent from most buckets.  Measured on
-        # the uniform synthetic corpus (60k docs, 1536 queries): firing
-        # cost 3x the full evaluation; these floors keep it off there.
-        if prune == "auto" and (
-            valid_pairs == 0
-            or potential_pairs / valid_pairs < 0.25
-            or potential_pairs < 4 * len(queries)
-        ):
-            seed_of = {}  # θ job cannot pay for itself
-        if seed_of:
-            # pass 2: exact scores in each query's seed bucket -> θ_q =
-            # k-th best there (a sound lower bound on the global k-th)
-            by_seed: dict[int, list[int]] = {}
-            for qid, bk in seed_of.items():
-                by_seed.setdefault(bk, []).append(qid)
-            restrict_bc = sc.broadcast(by_seed)
-            seed_rows = (
-                sel.filter(F.col("bucket").isin(sorted(by_seed)))
-                .groupBy("shard")
-                .applyInPandas(make_scorer(restrict_bc, None, None, None), schema=_BATCH_CAND_SCHEMA)
-                .collect()
-            )
-            by_q_scores: dict[int, list[float]] = {}
-            for r in seed_rows:
-                by_q_scores.setdefault(int(r["query_id"]), []).append(float(r["score"]))
-            thetas = {
-                qid: sorted(ss, reverse=True)[k - 1]
-                for qid, ss in by_q_scores.items()
-                if len(ss) >= k
-            }
-            if thetas:
-                theta_bc = sc.broadcast(thetas)
-                acc_total = sc.accumulator(0)
-                acc_skipped = sc.accumulator(0)
+    accs = None
     if stats_out is not None:
-        stats_out["query_evals_total"] = acc_total
-        stats_out["query_evals_skipped"] = acc_skipped
-        stats_out["chunks_total"], stats_out["chunks_decoded"] = acc_chunks
+        accs = tuple(sc.accumulator(0) for _ in _STATS_KEYS)
+        stats_out.update(zip(_STATS_KEYS, accs))
 
-    cands = sel.groupBy("shard").applyInPandas(
-        make_scorer(None, theta_bc, acc_total, acc_skipped), schema=_BATCH_CAND_SCHEMA
-    )
-    from pyspark.sql import Window
+    def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+        # the module-level kernel, shared bit-for-bit with the
+        # distributed-ingest variant
+        return _batch_walk_shard(pdf, bq.value, avg_doc_len, k, micro_rank, accs)
 
-    rank_col = (
-        F.round(F.col("score") * 1e6, 0).cast("long") if micro_rank else F.col("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc(rank_col), F.asc("doc_id"))
-    ranked = (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    cands = sel.groupBy("shard").applyInPandas(per_shard, schema=_BATCH_CAND_SCHEMA)
+    ranked = _merge_shards(cands, k, micro_rank)
     if len(all_queries) == len(group_of):
         return ranked  # no duplicate signatures
     mapping = spark.createDataFrame(
@@ -915,13 +648,9 @@ def wand_topk_batch_distributed(
 
     Each cogroup task rebuilds the per-shard query dict worker-side and
     runs the SAME kernel as the list path (_batch_walk_shard, including
-    the in-shard running θ), so results are rank-identical (pytest
-    tests/test_wand.py::test_batch_distributed_rank_identity).  The
-    cross-task seed-θ prune pass is deliberately absent: it needs a
-    per-query seed assignment collected on the driver, exactly the O(Q)
-    driver state this variant exists to avoid (the in-shard running θ is
-    retained and is the dominant skip at scale; a distributed seed
-    assignment is a natural follow-on).
+    its one skip rule, the in-shard running θ), so results are
+    rank-identical (pytest
+    tests/test_wand.py::test_batch_distributed_rank_identity).
 
     Reference analog: batch TREC query evaluation (hw3/DataLoader.cpp
     query loop) lifted to a query RELATION instead of a driver list.
@@ -978,26 +707,14 @@ def wand_topk_batch_distributed(
                 {"mode": t.mode, "n_terms": int(t.n_terms), "terms": {}},
             )
             qq["terms"][t.term] = (float(t.weight), float(t.idf))
-        return _batch_walk_shard(
-            idx_pdf, qs, None, None, None, None, avg_doc_len, k, micro_rank
-        )
+        return _batch_walk_shard(idx_pdf, qs, avg_doc_len, k, micro_rank)
 
     cands = (
         sel.groupBy("shard")
         .cogroup(qsh.groupBy("shard"))
         .applyInPandas(per_shard_cg, schema=_BATCH_CAND_SCHEMA)
     )
-    from pyspark.sql import Window
-
-    rank_col = (
-        F.round(F.col("score") * 1e6, 0).cast("long") if micro_rank else F.col("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc(rank_col), F.asc("doc_id"))
-    ranked = (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    ranked = _merge_shards(cands, k, micro_rank)
     # replicate each representative's ranked result to every member query
     # (plain join — the mapping can be as big as the batch; AQE broadcasts
     # it when it is small)
@@ -1028,13 +745,11 @@ def wand_topk(
     for one-query calls, the interactive shape — and task retries can make
     them approximate.
     """
-    # prune=False: a single interactive call cannot pay back the θ-gate's
-    # metadata and seed-pass jobs, and the in-shard running θ still skips
     if not with_stats:
-        return wand_topk_batch(blocks, lexicon, qterms, n_docs, avg_doc_len, k=k, prune=False)
+        return wand_topk_batch(blocks, lexicon, qterms, n_docs, avg_doc_len, k=k)
     stats: dict = {}
     rows = wand_topk_batch(
-        blocks, lexicon, qterms, n_docs, avg_doc_len, k=k, prune=False, stats_out=stats
+        blocks, lexicon, qterms, n_docs, avg_doc_len, k=k, stats_out=stats
     ).collect()
     extra = ("batch", int(stats["chunks_total"].value), int(stats["chunks_decoded"].value))
     return blocks.sparkSession.createDataFrame(

@@ -261,12 +261,13 @@ def test_batch_sparse_span_guard(spark):
 
 
 def test_batch_prune_skips_and_identical(spark):
-    """Bound-skipping (prune=True) on a corpus whose BM25 norms drift
-    monotonically with doc_id (doc length rising — the length-ordered
-    layout) must skip most (query, bucket) evaluations and stay
-    rank-identical to the unpruned path.  With doc_len = 50 + 2d every
-    bucket past the first has max_norm below the global 20th-best score,
-    so 9 of 10 alpha-buckets are skippable per query."""
+    """The running θ on a corpus whose BM25 norms drift monotonically with
+    doc_id (doc length rising — the length-ordered layout): with ONE shard
+    a single task walks every bucket in doc order, so once it holds k
+    results most later (query, bucket) evaluations bound-skip, and the
+    result must be identical to the default shard count.  With doc_len =
+    50 + 2d every bucket past the first has max_norm below the global
+    20th-best score, so 9 of 10 alpha-buckets are skippable per query."""
     rows = []
     for d in range(1000):  # df=1000 of N=4000 -> both terms positive idf
         rows.append((d, "alpha", 1, 50 + 2 * d))
@@ -279,62 +280,16 @@ def test_batch_prune_skips_and_identical(spark):
     )
     blocks = build_block_index(posts, avgdl, bucket_span=100).cache()
     blocks.count()
-    off = wand_topk_batch(blocks, lex, qt, n, avgdl, prune=False)
+    sharded = wand_topk_batch(blocks, lex, qt, n, avgdl)
     stats: dict = {}
-    on = wand_topk_batch(blocks, lex, qt, n, avgdl, prune=True, stats_out=stats)
-    a = sorted(map(tuple, off.collect()))
-    b = sorted(map(tuple, on.collect()))
+    one = wand_topk_batch(blocks, lex, qt, n, avgdl, n_shards=1, stats_out=stats)
+    a = sorted(map(tuple, sharded.collect()))
+    b = sorted(map(tuple, one.collect()))
     assert a == b
-    assert stats["query_evals_skipped"] is not None
     skipped = stats["query_evals_skipped"].value
     total = stats["query_evals_total"].value
     assert skipped >= total // 2 > 0, (skipped, total)
     blocks.unpersist()
-
-
-def test_batch_auto_gate_fires_on_skewed_declines_on_uniform(spark):
-    """The prune="auto" gate is an economic decision: the θ-derivation pass
-    costs one extra evaluation per query, so it must fire only when a large
-    fraction of (query, bucket) work is skippable.  Skewed corpus
-    (monotone doc_len -> bucket bounds spread far beyond the 5% median
-    margin): gate fires, skips work, stays rank-identical.  Uniform corpus
-    (constant doc_len -> every bucket bound identical): gate declines —
-    observable as stats_out accumulators staying None (no θ job ran)."""
-    skew = []
-    for d in range(1000):
-        skew.append((d, "alpha", 1, 50 + 2 * d))
-        skew.append((d, "beta", 1, 50 + 2 * d))
-    uni = [(d, t, 1, 100) for d in range(1000) for t in ("alpha", "beta")]
-    n, avgdl = 4000, 100.0
-    qt = query_terms_df(
-        spark, [(1, "alpha beta", DISJUNCTIVE), (2, "alpha beta", CONJUNCTIVE)]
-    )
-    for rows, should_fire in ((skew, True), (uni, False)):
-        posts = spark.createDataFrame(
-            rows, "doc_id long, term string, tf int, doc_len long"
-        )
-        lex = lexicon(posts).select("term", "df")
-        blocks = build_block_index(posts, avgdl, bucket_span=100).cache()
-        blocks.count()
-        truth = sorted(
-            map(tuple, wand_topk_batch(blocks, lex, qt, n, avgdl, prune=False).collect())
-        )
-        stats: dict = {}
-        auto = sorted(
-            map(
-                tuple,
-                wand_topk_batch(
-                    blocks, lex, qt, n, avgdl, prune="auto", stats_out=stats
-                ).collect(),
-            )
-        )
-        assert auto == truth
-        if should_fire:
-            assert stats["query_evals_skipped"] is not None
-            assert stats["query_evals_skipped"].value > 0
-        else:
-            assert stats["query_evals_total"] is None  # θ job never launched
-        blocks.unpersist()
 
 
 def test_batch_matrix_path_and_signature_dedup(spark, ctx):
@@ -506,8 +461,7 @@ def _corpus_and_queries(draw):
         qs.append((qid, " ".join(qterms), mode))
     span = draw(st.sampled_from([16, 50, None]))
     shards = draw(st.sampled_from([1, 3, None]))
-    prune = draw(st.sampled_from([False, True]))
-    return rows, qs, span, shards, prune
+    return rows, qs, span, shards
 
 
 @settings(max_examples=8, deadline=None)
@@ -719,8 +673,7 @@ def _corpus_and_queries(draw):
       (80, 'alpha', 1, 30)],
      [(0, 'alpha', 'disjunctive')],
      50,
-     1,
-     False),
+     1),
 ).via('discovered failure')
 @example(
     case=([(0, 'alpha', 1, 226),
@@ -840,14 +793,14 @@ def _corpus_and_queries(draw):
       (47, 'alpha', 2, 30)],
      [(0, 'alpha', 'disjunctive')],
      50,
-     1,
-     False),
+     1),
 ).via('discovered failure')
 def test_batch_property_matches_exhaustive(case):
     """Property (the engine's cross-evaluator contract, wand.py docstring):
     for random corpora (including duplicate-score ties from coarse tf/doc_len
     grids), random query bags (duplicate terms = weights), any
-    bucket_span/unbucketed layout, any shard count, pruning on or off —
+    bucket_span/unbucketed layout, any shard count (so any amount of
+    running-θ skipping) —
 
     1. wand_topk_batch is rank-identical to the exhaustive postings-table
        evaluator at MICRO resolution (round(score*1e6) desc, doc_id asc),
@@ -859,7 +812,7 @@ def test_batch_property_matches_exhaustive(case):
        the committed @example below is the round-3 falsifying case where a
        one-ulp multiply-association mismatch flipped a 5-way exact tie.)
     """
-    rows, qs, span, shards, prune = case
+    rows, qs, span, shards = case
     if not rows:
         return
     spark = _hyp_spark()
@@ -885,8 +838,7 @@ def test_batch_property_matches_exhaustive(case):
             truth_raw[(qid, d)] = s
     blocks = build_block_index(posts, avgdl, bucket_span=span)
     got_rows = wand_topk_batch(
-        blocks, lex, qt, n, avgdl, k=10, n_shards=shards, prune=prune,
-        micro_rank=True,
+        blocks, lex, qt, n, avgdl, k=10, n_shards=shards, micro_rank=True,
     ).collect()
     got = sorted(
         (r["query_id"], r["rank"], r["doc_id"], round(r["score"] * 1e6))
