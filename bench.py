@@ -181,22 +181,6 @@ def main() -> None:
                 blocks, lex, qt_big, st["n_docs"], st["avg_doc_len"], k=TOP_K
             ).count(),
         )
-        # distributed query ingest (wand_topk_batch_distributed): the query
-        # set stays a DataFrame — no driver collect/dedup/broadcast — the
-        # 10^6+-queries-per-batch architecture.  At 512 queries it pays the
-        # relational dedup + cogroup overhead the list path avoids; the
-        # line documents that fixed cost (the variant's win begins where
-        # the driver loop becomes the bottleneck, not here).
-        from sparksearch.wand import wand_topk_batch_distributed
-
-        qt_big_df = query_terms_df(spark, big_set)
-        timed(
-            "wand_batch_512q_distq",
-            lambda: wand_topk_batch_distributed(
-                blocks, lex, qt_big_df, st["n_docs"], st["avg_doc_len"], k=TOP_K
-            ).count(),
-        )
-
         # pruning evidence: the kernel's chunks decoded vs total per query,
         # from wand_topk's per-call counters (one call per query, so a
         # call's counts are that query's).  Block-max skipping operates per
@@ -221,7 +205,6 @@ def main() -> None:
                 r = stats_rows[0]
                 tot, dec = int(r["chunks_total"]), int(r["chunks_decoded"])
                 pruning[str(q[0])] = {
-                    "evaluator": r["evaluator"],
                     "chunks_total": tot,
                     "chunks_decoded": dec,
                     "decode_ratio": round(dec / max(tot, 1), 4),

@@ -175,23 +175,6 @@ def bucket_expr(vec_col: str, num_planes: int, table_id: int, dim: int) -> Colum
     return bucket
 
 
-def lsh_buckets(
-    embeddings: DataFrame,
-    num_planes: int = 8,
-    table_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """(vec_id, bucket): one narrow map over the table (see bucket_expr)."""
-    if dim is None:
-        dim = _infer_dim(embeddings, vec_col)
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        bucket_expr(vec_col, num_planes, table_id, dim).alias("bucket"),
-    )
-
-
 def lsh_bucket_topk(
     embeddings: DataFrame,
     probe_ids: list[int],

@@ -38,7 +38,7 @@ doc table/lexicon at startup the same way, hw3/DocTable.cpp:67-102).
 ``run_incremental_index(..., available_now=True)`` drains everything
 currently in the input directory and stops — the testable/batch-catchup
 trigger; with ``available_now=False`` it runs continuously per
-micro-batch.
+micro-batch until the caller stops the returned ``StreamingQuery``.
 """
 
 from __future__ import annotations
@@ -48,9 +48,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from .blocks import build_block_index
-from .corpus import DOCUMENTS_SCHEMA
+from .corpus import documents_from_corpus
 from .tokenize import postings_from_documents
 
 DEFAULT_BUCKET_SPAN = 1 << 14
@@ -134,19 +135,11 @@ def ingest_batch(
     # docstring)
     offset = -(-int(state["next_doc_id"]) // bucket_span) * bucket_span
 
-    from .corpus import assign_dense_ids
-
-    with_ids = assign_dense_ids(batch_df, ["repo", "path"])
-    docs = with_ids.select(
-        (F.col("doc_id") + F.lit(offset)).alias("doc_id"),
-        "repo",
-        "path",
-        "commit",
-        "lang",
-        "content",
-        F.length("content").cast("long").alias("doc_len"),
-        F.sha2(F.col("content"), 256).alias("content_sha256"),
-    ).localCheckpoint(eager=True)
+    docs = (
+        documents_from_corpus(batch_df)
+        .withColumn("doc_id", F.col("doc_id") + F.lit(offset))
+        .localCheckpoint(eager=True)
+    )
     n = docs.count()
 
     hint = state.get("avg_doc_len_hint") or avg_doc_len_hint
@@ -199,7 +192,7 @@ def run_incremental_index(
     available_now: bool = True,
     avg_doc_len_hint: float | None = None,
     max_files_per_trigger: int = 4,
-) -> None:
+) -> StreamingQuery:
     """Consume corpus parquet files arriving in ``input_dir``
     (repo, path, commit, lang, content) and maintain an appendable blocked
     index + documents table under ``index_dir``.
@@ -210,6 +203,11 @@ def run_incremental_index(
     constant, so the bounds stay sound as the collection grows.  This is
     the reference's own policy — it scores with compile-time DOC_AVG_LEN
     (hw3/config.h:60).  Re-pinning is a compaction-time rewrite.
+
+    Returns the ``StreamingQuery`` in both modes: with ``available_now``
+    it has already terminated; otherwise it keeps running until the
+    caller stops it (``processAllAvailable()`` then ``stop()``, or
+    ``awaitTermination()``).
     """
     os.makedirs(index_dir, exist_ok=True)
     corpus_schema = "repo string, path string, commit string, lang string, content string"
@@ -226,11 +224,11 @@ def run_incremental_index(
         reader.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", os.path.join(index_dir, "_checkpoint"))
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        writer.start()
+    if not available_now:
+        return writer.start()
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
 
 def compact_index(

@@ -2,10 +2,10 @@
 
 The reference evaluates queries TAAT-exhaustively (hw3/DataLoader.cpp:372-430)
 with chunk skipping only in the conjunctive probe (hw3/DataLoader.cpp:793-864
-via per-chunk last_docID).  Here every entry point — :func:`wand_topk` (one
-interactive call), :func:`wand_topk_batch` (a driver-side query list) and
-:func:`wand_topk_batch_distributed` (a query DataFrame) — runs the same
-kernel, :func:`_batch_walk_shard`: the vocabulary-pruned index is shuffled
+via per-chunk last_docID).  Here both entry points — :func:`wand_topk` (one
+interactive call) and :func:`wand_topk_batch` (a query batch, the
+reference's driver-side query loop) — run the same kernel,
+:func:`_batch_walk_shard`: the vocabulary-pruned index is shuffled
 once into doc-range shards, each shard walks its buckets in ascending doc
 order, decodes every matched term once, scores ALL queries against the
 decoded arrays range-at-a-time, and keeps a per-query running top-k whose
@@ -123,16 +123,6 @@ TOPK_SCHEMA = T.StructType(
     ]
 )
 
-# wand_topk(with_stats=True): the call's kernel counters appended to every row
-TOPK_STATS_SCHEMA = T.StructType(
-    list(TOPK_SCHEMA.fields)
-    + [
-        T.StructField("evaluator", T.StringType(), False),
-        T.StructField("chunks_total", T.LongType(), False),
-        T.StructField("chunks_decoded", T.LongType(), False),
-    ]
-)
-
 
 def _micro_i64(scores: np.ndarray) -> np.ndarray:
     """round(score * 1e6) half-away-from-zero — the repo-wide *_micro
@@ -149,9 +139,8 @@ def _disjunctive_bound(acc_pos: float, best_single: float) -> float:
     return acc_pos if acc_pos > 0.0 else best_single
 
 
-# shared by wand_topk_batch (broadcast query ingest) and
-# wand_topk_batch_distributed (DataFrame query ingest): BOTH paths run the
-# exact same per-shard kernel below, so their scores are bit-identical by
+# per-shard candidate rows of wand_topk_batch, which wand_topk also runs:
+# both entries share this one kernel, so their scores are bit-identical by
 # construction (the fp-determinism contract, bm25.py module docstring).
 _BATCH_CAND_SCHEMA = T.StructType(
     [
@@ -163,6 +152,11 @@ _BATCH_CAND_SCHEMA = T.StructType(
 _BATCH_EMPTY = {"query_id": np.int32, "doc_id": np.int64, "score": np.float64}
 # stats_out keys, in _batch_walk_shard's ``accs`` order
 _STATS_KEYS = ("chunks_total", "chunks_decoded", "query_evals_total", "query_evals_skipped")
+
+# wand_topk(with_stats=True): the call's stats_out counters appended to every row
+TOPK_STATS_SCHEMA = T.StructType(
+    list(TOPK_SCHEMA.fields) + [T.StructField(c, T.LongType(), False) for c in _STATS_KEYS]
+)
 
 
 def _merge_shards(cands: DataFrame, k: int, micro_rank: bool) -> DataFrame:
@@ -561,8 +555,8 @@ def wand_topk_batch(
     # computed once per DISTINCT term, not once per (query, term) row
     idf_by_term = {t: bm25_idf_py(lex_rows.get(t, 0), n_docs) for t in vocab}
     all_queries: dict[int, dict] = {}
-    # terms inserted in sorted order, as wand_topk_batch_distributed does:
-    # the per-query kernel path adds a multi-term sum in insertion order
+    # terms inserted in sorted order: the per-query kernel path adds a
+    # multi-term sum in insertion order, which must not depend on typing
     for r in sorted(rows, key=lambda r: r["term"]):
         q = all_queries.setdefault(
             int(r["query_id"]), {"mode": r["mode"], "n_terms": int(r["n_terms"]), "terms": {}}
@@ -595,8 +589,6 @@ def wand_topk_batch(
         stats_out.update(zip(_STATS_KEYS, accs))
 
     def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        # the module-level kernel, shared bit-for-bit with the
-        # distributed-ingest variant
         return _batch_walk_shard(pdf, bq.value, avg_doc_len, k, micro_rank, accs)
 
     cands = sel.groupBy("shard").applyInPandas(per_shard, schema=_BATCH_CAND_SCHEMA)
@@ -610,117 +602,6 @@ def wand_topk_batch(
     return (
         ranked.withColumnRenamed("query_id", "rep")
         .join(F.broadcast(mapping), "rep")
-        .select("query_id", "rank", "doc_id", "score")
-    )
-
-
-def wand_topk_batch_distributed(
-    blocks: DataFrame,
-    lexicon: DataFrame,
-    qterms: DataFrame,
-    n_docs: int,
-    avg_doc_len: float,
-    k: int = TOP_K,
-    micro_rank: bool = False,
-    n_shards: int | None = None,
-) -> DataFrame:
-    """Distributed-query-ingest variant of :func:`wand_topk_batch` for
-    HUGE batches (10^5-10^8 queries): the query set stays a DataFrame
-    end-to-end — no driver collect, no driver dedup loop, no broadcast
-    dict — so batch size is bounded by cluster memory, not the driver.
-
-    Where the list path's fixed driver work scales O(|batch|):
-
-    * idf resolution: DISTINCT terms left-join the lexicon (AQE picks
-      broadcast when the vocab is small, shuffle join when it is the whole
-      10^7-term lexicon), idf computed in an Arrow-batched UDF over
-      distinct terms only — the ONE libm definition (bm25.bm25_idf_py),
-      never JVM F.log (fp-determinism contract, bm25.py docstring);
-    * signature dedup: groupBy(query_id) → sorted (term, weight) bag →
-      groupBy(bag) picks rep = min(query_id), a pure shuffle aggregation
-      (the list path's driver loop);
-    * query distribution: rep queries are replicated shard-wise via an
-      explicit crossJoin with the n_shards ids and COGROUPED with the
-      doc-sharded index — a (|rep terms| × n_shards)-row shuffle instead of
-      a driver broadcast (the sharded twin of the broadcast-dict design;
-      at 10^6+ queries the broadcast itself is the bottleneck the judge's
-      r4 review called out).
-
-    Each cogroup task rebuilds the per-shard query dict worker-side and
-    runs the SAME kernel as the list path (_batch_walk_shard, including
-    its one skip rule, the in-shard running θ), so results are
-    rank-identical (pytest
-    tests/test_wand.py::test_batch_distributed_rank_identity).
-
-    Reference analog: batch TREC query evaluation (hw3/DataLoader.cpp
-    query loop) lifted to a query RELATION instead of a driver list.
-    """
-    spark = blocks.sparkSession
-    if n_shards is None:
-        n_shards = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    qcols = qterms.select("query_id", "mode", "n_terms", "term", "weight")
-    terms = qcols.select("term").distinct()
-    # df per distinct term (absent terms keep df=0 — they contribute no
-    # blocks but still count toward conjunctive n_terms)
-    tdf = terms.join(lexicon.select("term", "df"), "term", "left").na.fill({"df": 0})
-
-    @F.pandas_udf("double")
-    def idf_udf(dfc: pd.Series) -> pd.Series:
-        return pd.Series([bm25_idf_py(int(x), n_docs) for x in dfc], dtype="float64")
-
-    tidf = tdf.select("term", idf_udf(F.col("df")).alias("idf"))
-    q = qcols.join(tidf, "term")
-
-    # signature dedup as a relational aggregation: rep = min(query_id) per
-    # (mode, n_terms, sorted weighted-term bag) — identical grouping AND
-    # identical representative choice as the list path's driver loop
-    sig = qcols.groupBy("query_id").agg(
-        F.first("mode").alias("mode"),
-        F.first("n_terms").alias("n_terms"),
-        F.sort_array(F.collect_list(F.struct("term", "weight"))).alias("bag"),
-    )
-    groups = sig.groupBy("mode", "n_terms", "bag").agg(
-        F.min("query_id").alias("rep"),
-        F.collect_list("query_id").alias("members"),
-    )
-    mapping = groups.select("rep", F.explode("members").alias("query_id"))
-    rep_ids = groups.select(F.col("rep").alias("query_id"))
-    rep_terms = q.join(rep_ids, "query_id", "left_semi")
-
-    shards = spark.range(int(n_shards)).select(F.col("id").cast("int").alias("shard"))
-    qsh = rep_terms.crossJoin(shards)
-
-    # vocabulary pruning via semi join (the IN-list literal pushdown of the
-    # list path assumes a driver-side vocab; here the vocab is a relation)
-    sel = blocks.join(terms, "term", "left_semi").withColumn(
-        "shard", F.pmod(F.col("bucket"), F.lit(int(n_shards)))
-    )
-
-    def per_shard_cg(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
-        if idx_pdf.empty or q_pdf.empty:
-            return pd.DataFrame({c: [] for c in _BATCH_EMPTY}).astype(_BATCH_EMPTY)
-        qs: dict[int, dict] = {}
-        for t in q_pdf.sort_values(["query_id", "term"]).itertuples(index=False):
-            qq = qs.setdefault(
-                int(t.query_id),
-                {"mode": t.mode, "n_terms": int(t.n_terms), "terms": {}},
-            )
-            qq["terms"][t.term] = (float(t.weight), float(t.idf))
-        return _batch_walk_shard(idx_pdf, qs, avg_doc_len, k, micro_rank)
-
-    cands = (
-        sel.groupBy("shard")
-        .cogroup(qsh.groupBy("shard"))
-        .applyInPandas(per_shard_cg, schema=_BATCH_CAND_SCHEMA)
-    )
-    ranked = _merge_shards(cands, k, micro_rank)
-    # replicate each representative's ranked result to every member query
-    # (plain join — the mapping can be as big as the batch; AQE broadcasts
-    # it when it is small)
-    return (
-        ranked.withColumnRenamed("query_id", "rep")
-        .join(mapping, "rep")
         .select("query_id", "rank", "doc_id", "score")
     )
 
@@ -739,11 +620,10 @@ def wand_topk(
     raw-score ranking).
 
     With ``with_stats`` the result is collected and returned as a local
-    DataFrame (TOPK_STATS_SCHEMA) whose every row also carries
-    ``evaluator="batch"`` and the call's ``chunks_total`` /
-    ``chunks_decoded`` kernel counters.  The counts are per CALL — per query
-    for one-query calls, the interactive shape — and task retries can make
-    them approximate.
+    DataFrame (TOPK_STATS_SCHEMA) whose every row also carries the call's
+    four ``stats_out`` counters (:func:`wand_topk_batch`, ``_STATS_KEYS``).
+    The counts are per CALL — per query for one-query calls, the
+    interactive shape — and task retries can make them approximate.
     """
     if not with_stats:
         return wand_topk_batch(blocks, lexicon, qterms, n_docs, avg_doc_len, k=k)
@@ -751,7 +631,7 @@ def wand_topk(
     rows = wand_topk_batch(
         blocks, lexicon, qterms, n_docs, avg_doc_len, k=k, stats_out=stats
     ).collect()
-    extra = ("batch", int(stats["chunks_total"].value), int(stats["chunks_decoded"].value))
+    extra = tuple(int(stats[c].value) for c in _STATS_KEYS)
     return blocks.sparkSession.createDataFrame(
         [tuple(r) + extra for r in rows], TOPK_STATS_SCHEMA
     )

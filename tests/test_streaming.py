@@ -32,6 +32,19 @@ QUERIES = [
 ]
 
 
+def _drop_corpus(spark, flat, n_docs, seed, n_files):
+    """Write a synthetic corpus as ``n_files`` flat parquet files into the
+    stream input dir ``flat``."""
+    import glob
+    import shutil
+
+    os.makedirs(flat)
+    synthetic_corpus(spark, n_docs, seed=seed).coalesce(n_files).write.parquet(f"{flat}/c0")
+    for j, f in enumerate(sorted(glob.glob(f"{flat}/c0/*.parquet"))):
+        shutil.move(f, f"{flat}/f{j}.parquet")
+    shutil.rmtree(f"{flat}/c0")
+
+
 def test_streamed_index_equals_batch(spark, tmp_path):
     inbox = str(tmp_path / "inbox")
     index_dir = str(tmp_path / "index")
@@ -102,20 +115,32 @@ def test_stream_resume_no_double_count(spark, tmp_path):
     """Re-running the drained stream must not re-index anything."""
     flat = str(tmp_path / "in2")
     index_dir = str(tmp_path / "idx2")
-    os.makedirs(flat)
-    synthetic_corpus(spark, 50, seed=9).coalesce(1).write.parquet(f"{flat}/c0")
-    import glob
-    import shutil
-
-    for j, f in enumerate(sorted(glob.glob(f"{flat}/c0/*.parquet"))):
-        shutil.move(f, f"{flat}/f{j}.parquet")
-    shutil.rmtree(f"{flat}/c0")
+    _drop_corpus(spark, flat, 50, seed=9, n_files=1)
 
     run_incremental_index(spark, flat, index_dir, available_now=True)
     _, _, _, s1 = read_index(spark, index_dir)
     run_incremental_index(spark, flat, index_dir, available_now=True)
     _, _, _, s2 = read_index(spark, index_dir)
     assert s1["n_docs"] == s2["n_docs"] == 50
+
+
+def test_continuous_stream_handle(spark, tmp_path):
+    """With available_now=False the indexer returns its running
+    StreamingQuery: the caller drains it, stops it, and the index then
+    holds every dropped doc."""
+    flat = str(tmp_path / "in_cont")
+    index_dir = str(tmp_path / "idx_cont")
+    _drop_corpus(spark, flat, 40, seed=5, n_files=2)
+
+    q = run_incremental_index(spark, flat, index_dir, bucket_span=32, available_now=False)
+    try:
+        assert q.isActive
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert not q.isActive
+    _, _, _, stats = read_index(spark, index_dir)
+    assert stats["n_docs"] == 40
 
 
 def test_exactly_once_commit_protocol(spark, tmp_path):
@@ -172,16 +197,9 @@ def test_compaction_preserves_results(spark, tmp_path):
     """Compaction (uniform re-bucketing + avgdl re-pin) must answer queries
     identically to a from-scratch batch build over the same docs with the
     same (re-pinned) avgdl."""
-    import glob
-    import shutil
-
     flat = str(tmp_path / "in3")
     index_dir = str(tmp_path / "idx3")
-    os.makedirs(flat)
-    synthetic_corpus(spark, 200, seed=13).coalesce(2).write.parquet(f"{flat}/c0")
-    for j, f in enumerate(sorted(glob.glob(f"{flat}/c0/*.parquet"))):
-        shutil.move(f, f"{flat}/f{j}.parquet")
-    shutil.rmtree(f"{flat}/c0")
+    _drop_corpus(spark, flat, 200, seed=13, n_files=2)
 
     run_incremental_index(spark, flat, index_dir, bucket_span=32, available_now=True)
     from sparksearch.streaming import compact_index

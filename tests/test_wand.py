@@ -12,7 +12,7 @@ from sparksearch.oracle.wand_cursor import cursor_topk
 from sparksearch.query import query_term_rows, query_terms_df, topk
 from sparksearch.stats import collection_stats, lexicon
 from sparksearch.tokenize import postings_from_documents
-from sparksearch.wand import wand_topk, wand_topk_batch
+from sparksearch.wand import _STATS_KEYS, TOPK_SCHEMA, wand_topk, wand_topk_batch
 
 QUERIES = [
     (1, "if return", DISJUNCTIVE),
@@ -128,7 +128,8 @@ def test_chunk_meta_fallback_and_stats(spark, ctx):
     per-chunk score bounds (old index layout): stripping them changes only
     how many chunks the cursor decodes, never the ranked output, and the
     cursor's chunk-granular skipping must really skip on rare-term queries.
-    wand_topk's with_stats columns must be self-consistent: the kernel
+    wand_topk's with_stats columns are TOPK_SCHEMA plus the four stats_out
+    counters, equal to a wand_topk_batch call's stats_out: the kernel
     receives every block of the query terms once per call."""
     docs, posts, st, lex, blocks, idx = ctx
     n, avgdl = st["n_docs"], st["avg_doc_len"]
@@ -148,8 +149,12 @@ def test_chunk_meta_fallback_and_stats(spark, ctx):
     assert _key(stats) == _key(plain)
     vocab = sorted({r["term"] for r in rows})
     want_total = blocks.filter(F.col("term").isin(vocab)).agg(F.sum("n_chunks")).first()[0]
-    assert {(r["evaluator"], r["chunks_total"]) for r in stats} == {("batch", want_total)}
-    assert all(r["chunks_decoded"] <= r["chunks_total"] for r in stats)
+    assert stats and list(stats[0].asDict()) == TOPK_SCHEMA.names + list(_STATS_KEYS)
+    acc: dict = {}
+    wand_topk_batch(blocks, lex, qt, n, avgdl, stats_out=acc).collect()
+    want = tuple(acc[c].value for c in _STATS_KEYS)
+    assert {tuple(r[c] for c in _STATS_KEYS) for r in stats} == {want}
+    assert want[0] == want[1] == want_total and 0 <= want[3] <= want[2]
 
 
 def test_kernel_independent_of_block_order(spark, ctx):
@@ -367,53 +372,50 @@ def test_batch_list_qterms_and_shard_invariance(spark):
         assert got == truth, shards
     blocks.unpersist()
 
-def test_batch_distributed_rank_identity(spark, ctx):
-    """The DataFrame-ingest variant (wand_topk_batch_distributed — no driver
-    collect/dedup-loop/broadcast; judge r4 item 4) must be rank-identical to
-    the list path on a 10^5-query batch with heavy signature duplication.
 
-    Half the query texts list their terms unsorted: every entry point
-    inserts a query's terms in sorted order, so cross-term accumulation
-    order (the one fp degree of freedom left once bm25.py pins each
-    contribution) cannot depend on how a query was typed.  A small batch
-    of unsorted 3-4-term queries, which takes the per-query kernel path,
-    must give bit-identical raw scores on all three entry points."""
+def test_batch_signature_dedup_at_scale(spark, ctx):
+    """A 10^5-query batch with 50x signature duplication, half of its texts
+    in reversed term order, must equal its 2,024 representative queries
+    (rep = min query_id per signature) run once and copied to every member
+    id: wand_topk_batch scores each (mode, weighted term bag) once, and
+    every entry point inserts a query's terms in sorted order, so
+    cross-term accumulation order (the one fp degree of freedom left once
+    bm25.py pins each contribution) cannot depend on how a query was typed.
+    A small batch of unsorted 3-4-term queries, which takes the per-query
+    kernel path, must give bit-identical raw scores on both entry points."""
     from itertools import combinations
 
-    from sparksearch.wand import wand_topk_batch_distributed
-
     docs, posts, st_, lex, blocks, idx = ctx
+    n, avgdl = st_["n_docs"], st_["avg_doc_len"]
     pool = [
         "if", "return", "def", "else", "while", "for", "int", "x", "i",
         "the", "buffer", "size", "node", "value", "count", "len", "data",
         "uniq13tok", "sym1", "sym2", "sym3", "alpha", "key", "map",
     ]
     triples = list(combinations(pool, 3))  # C(24,3) = 2024 unique signatures
+    n_sig, n_rep = len(triples), 50
     qset = []
-    for rep in range(50):
+    for rep in range(n_rep):
         for j, trip in enumerate(triples):
-            qid = rep * len(triples) + j
+            qid = rep * n_sig + j
             mode = DISJUNCTIVE if j % 2 == 0 else CONJUNCTIVE
             words = sorted(trip) if rep % 2 else reversed(trip)
             qset.append((qid, " ".join(words), mode))
     assert len(qset) >= 100_000
-    qt = query_terms_df(spark, qset)
     k = 5
-    ref = wand_topk_batch(
-        blocks, lex, qt, st_["n_docs"], st_["avg_doc_len"], k=k, micro_rank=True
+    got = wand_topk_batch(
+        blocks, lex, query_terms_df(spark, qset), n, avgdl, k=k, micro_rank=True
+    ).collect()
+    reps = wand_topk_batch(
+        blocks, lex, query_term_rows(qset[:n_sig]), n, avgdl, k=k, micro_rank=True
+    ).collect()
+    assert reps
+    want = sorted(
+        (rep * n_sig + r["query_id"], r["rank"], r["doc_id"], r["score"])
+        for rep in range(n_rep)
+        for r in reps
     )
-    got = wand_topk_batch_distributed(
-        blocks, lex, qt, st_["n_docs"], st_["avg_doc_len"], k=k, micro_rank=True
-    )
-    a = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in ref.collect()
-    )
-    b = sorted(
-        (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-        for r in got.collect()
-    )
-    assert len(a) == len(b) and a == b
+    assert sorted(map(tuple, got)) == want
 
     small = [
         (1, "while the if", DISJUNCTIVE),
@@ -423,17 +425,14 @@ def test_batch_distributed_rank_identity(spark, ctx):
         (5, "while else def", CONJUNCTIVE),
         (6, "the int for", CONJUNCTIVE),
     ]
-    qs = query_terms_df(spark, small)
-    n, avgdl = st_["n_docs"], st_["avg_doc_len"]
     raw = [
         sorted(map(tuple, res.collect()))
         for res in (
-            wand_topk(blocks, lex, qs, n, avgdl),
+            wand_topk(blocks, lex, query_terms_df(spark, small), n, avgdl),
             wand_topk_batch(blocks, lex, query_term_rows(small), n, avgdl),
-            wand_topk_batch_distributed(blocks, lex, qs, n, avgdl),
         )
     ]
-    assert raw[0] and raw[0] == raw[1] == raw[2]
+    assert raw[0] and raw[0] == raw[1]
 
 
 from hypothesis import example, given, settings
